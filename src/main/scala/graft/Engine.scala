@@ -100,18 +100,9 @@ class Engine(val spark: SparkSession) {
 }
 
 object Engine {
-  /** Local-mode engine with the graft extensions installed, shuffle
-    * partitions sized for local cores (not the 200 default). */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): Engine = {
-    val spark = Env.tuned(SparkSession.builder())
-      .master(s"local[$cores]")
-      .appName("wasaffispark")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new Engine(spark)
-  }
+  /** Local-mode engine on the one [[Env.session]] builder: graft
+    * extensions installed, shuffle partitions sized for local cores
+    * (not the 200 default). */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): Engine =
+    new Engine(Env.session(cores))
 }

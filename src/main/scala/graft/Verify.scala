@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,17 +15,11 @@ object Verify {
         s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Env.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", Env.scratchDir)
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Env.session(cpus,
+      "spark.local.dir" -> Env.scratchDir,
       // pyarrow/duckdb-friendly timestamps (INT96 is legacy)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => wanted(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -36,21 +28,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes quotes, backslashes and ALL control chars — a tab
+    // or CR in builder-authored SQL would otherwise make the driver's
+    // json.load fail and silently zero the round's correctness
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val oracle = json.createObjectNode()
+    SparkEntry.oracleSql.filter(kv => wanted(kv._1))
+      .foreach { case (k, v) => oracle.put(k, v) }
+    json.writeValue(new java.io.File(s"$outDir/oracle_sql.json"), oracle)
     spark.stop()
   }
 }

@@ -81,8 +81,7 @@ object WasmRuntime {
     * JIT class. (A weak-keyed map was rejected here: a [[WasmInstance]]
     * value strongly references its module key, which per the WeakHashMap
     * javadoc pins the weak key forever — the exact leak this registry
-    * design avoids.) Set -Dgraft.wasm.pool=off for the fresh-instance-
-    * per-invocation fallback. */
+    * design avoids.) */
   // NOT a hash set: java.util maps hash/compare by CONTENTS, so two
   // per-thread maps registered while empty would dedupe into one (and
   // mutate their hash afterwards). A queue keeps each map by identity;
@@ -96,20 +95,15 @@ object WasmRuntime {
     m
   }
 
-  private def poolingEnabled: Boolean =
-    !"off".equalsIgnoreCase(System.getProperty("graft.wasm.pool", "on"))
-
-  private def instanceFor(module: WasmModule): WasmInstance =
-    if (!poolingEnabled) { instancesCreated.incrementAndGet(); new WasmInstance(module) }
-    else {
-      val m = pool.get()
-      var inst = m.get(module)
-      if (inst == null) {
-        instancesCreated.incrementAndGet()
-        inst = new WasmInstance(module); m.put(module, inst)
-      }
-      inst
+  private def instanceFor(module: WasmModule): WasmInstance = {
+    val m = pool.get()
+    var inst = m.get(module)
+    if (inst == null) {
+      instancesCreated.incrementAndGet()
+      inst = new WasmInstance(module); m.put(module, inst)
     }
+    inst
+  }
 
   /** Pooled instances alive across ALL threads — the lifecycle observable
     * for the DROP-evicts-instances spec. */

@@ -435,7 +435,7 @@ object DedupOps {
       // per-batch graphs of p162/p163, p227's lifted 5-cut graph, the
       // SharedStages label builds), this single job replaces the whole
       // fixpoint — init + N×(checkpoint + convergence scan) jobs whose
-      // cost was measured (r20 CcProbe) to be per-stage overhead, not
+      // cost was measured (r20, OPTIMIZATION_r20.md) to be per-stage overhead, not
       // data. A graph over the cap pays one partial scan and runs the
       // unchanged distributed loop.
       val probe = edges.limit(localMaxEdges + 1).collect()

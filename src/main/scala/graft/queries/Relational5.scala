@@ -181,9 +181,9 @@ object Relational5 {
 
     // ---- engine UDF through the function factory (the reference's
     // flagship operator, oracle-checked) ------------------------------------
-    // The DDL command is invoked directly (the driver's plain session has
-    // no GraftParser installed); the registered function then runs through
-    // ordinary spark.sql. DuckDB computes the same pow() natively — the
+    // The DDL command is invoked directly (so the entry also runs on a
+    // session without GraftParser); the registered function then runs
+    // through ordinary spark.sql. DuckDB computes the same pow() natively — the
     // check is that the factory → registry → invoke path computes exactly
     // what the engine-native function does.
     Q("q55_engine_udf", Some("""

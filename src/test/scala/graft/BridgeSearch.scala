@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe (r19): search for texts A,B,C with simhash hamming
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object BridgeSearch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("bridge-search")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session(8)
     import spark.implicits._
     val base = (0 until 48).map(i => f"word$i%02d")
     val extras = (0 until 26).map(i => ('a' + i).toChar.toString * 5)

@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerFlush
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -54,21 +54,10 @@ class BroadcastGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   import CaptureListener.Cap
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("broadcast-guard")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.queryExecutionListeners",
-        "graft.CaptureListener")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark =
+    Env.session(8, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.queryExecutionListeners" -> "graft.CaptureListener")
 
   override def afterAll(): Unit = spark.stop()
 

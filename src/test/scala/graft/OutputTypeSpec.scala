@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -29,13 +28,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class OutputTypeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = Env.tuned(SparkSession.builder())
-    .master("local[4]")
-    .appName("output-type-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Env.session(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -66,6 +59,27 @@ class OutputTypeSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"session-zone TIMESTAMP / DATE output columns break the oracle " +
         s"schema compare — cast to string, epoch ints, or NTZ:\n" +
         offenders.mkString("\n"))
+  }
+
+  // The session every main shares (Env.session) carries the engine
+  // extensions, so Verify's oracle and Bench's timings see the batch
+  // operator the engine runs, not a row-wise fallback.
+  test("Env.session plans the WASM UDF entry q63 through BatchProjectExec") {
+    val plan = SparkEntry.queries("q63_wasm_udf")(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("BatchProject"),
+      s"q63 must plan the batch UDF operator:\n$plan")
+  }
+
+  test("Bench's timed action computes the UDF column: q63, q65 and q67 " +
+    "each make guest calls") {
+    for (q <- Seq("q63_wasm_udf", "q65_wasm_rev", "q67_wasm_simd")) {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      val before = functions.WasmRuntime.invocations.get()
+      Bench.runAnswer(df)
+      val calls = functions.WasmRuntime.invocations.get() - before
+      assert(calls > 0, s"$q: the timed action made $calls guest calls")
+    }
   }
 
   test("every query has either an oracle or a documented rows-only status") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: p163's per-batch state-commit volume under the bucketed
   * versioned state. Runs the ingest, then reports per state version
   * (= per micro-batch) how many rows and buckets the commit wrote, plus
@@ -17,14 +15,7 @@ object P163CommitProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nFiles = args.lift(1).map(_.toInt).getOrElse(3)
     val width = args.lift(2).map(_.toLong).getOrElse(512L)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("p163-commit-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session(8)
     val root = s"${sys.props("java.io.tmpdir")}/p163probe_${System.nanoTime()}"
     graft.streaming.StreamingOps.p163BatchTimings.clear()
     graft.streaming.StreamingOps.p163ReadStats.clear()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -12,13 +11,7 @@ import graft.ops.{DedupOps, SimilarityOps, TextOps}
   */
 class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Env.session(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -1011,10 +1004,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((Long.MaxValue, Long.MaxValue - 1L)).toDF("a", "b")
         .select(NumberTheory.lcmCol(col("a"), col("b"))).collect()
     }
-    // SQL registration path (engine extensions): same kernels by name
-    GraftExtensions.functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
+    // SQL path (the session's engine extensions): same kernels by name
     assert(spark.sql("SELECT graft_gcd(12L, 18L), graft_lcm(4L, 6L)")
       .collect().head.toSeq == Seq(6L, 12L))
     // DF38 coercion parity: bare INT literals widen to BIGINT via
@@ -1173,10 +1163,8 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("partial_graft_min_top_n") &&
       plan.contains("graft_min_top_n"),
       s"expected a two-phase ObjectHashAggregate over the kernel:\n$plan")
-    // SQL registration path: same kernel by name, analyzer-wrapped agg
-    GraftExtensions.functions.foreach { case (fid, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(fid, info, builder)
-    }
+    // SQL path (the session's engine extensions): same kernel by name,
+    // analyzer-wrapped agg
     df.createOrReplaceTempView("topn_in")
     val viaSql = spark.sql(
       "SELECT grp, graft_min_top_n(h, id, 5) AS top FROM topn_in GROUP BY grp")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
@@ -30,15 +29,7 @@ object PlanShapeProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("plan-shape-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session(8, "spark.sql.adaptive.enabled" -> "false")
     val dir = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq else heavyEntries
     names.foreach { n =>

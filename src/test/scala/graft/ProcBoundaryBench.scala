@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev micro-benchmark: the Arrow IPC process-boundary cost per batch.
   * Runs the same pow() projection over N rows through the in-JVM module
   * (zero-copy) and through the `proc:` guest subprocess (one Arrow IPC

@@ -154,14 +154,7 @@ object QuadraticJoinLint {
 /** Probe main: print every flagged entry (allowlist discovery). */
 object QuadraticJoinProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("quadratic-join-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session(8)
     val dir = "/root/testdata/sf0.001"
     val names = SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -60,17 +59,7 @@ class QuadraticJoinLintSpec extends AnyFunSuite with BeforeAndAfterAll {
     // deliberate cross-join demo is 5×5 forever
     "q20_cross_join" -> "region × region; region is a constant 5-row dim")
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("quadratic-join-lint")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark = Env.session(8)
 
   override def afterAll(): Unit = spark.stop()
 

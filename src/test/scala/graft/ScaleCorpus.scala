@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r17 scale audit, ×8 extension r18): materialize ×N copies
@@ -18,10 +17,7 @@ object ScaleCorpus {
     val outRoot = args.lift(1).getOrElse("/tmp/graft_scale")
     val factors = args.lift(2).getOrElse("2,4")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("scale-corpus").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session(8)
     val shift = 1000000000L
     for (factor <- factors) {
       val out = s"${outRoot}_x$factor"

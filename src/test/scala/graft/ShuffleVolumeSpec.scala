@@ -3,7 +3,6 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerFlush
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,20 +48,10 @@ class ShuffleVolumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("shuffle-volume-spec")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.queryExecutionListeners", "graft.CaptureListener")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark =
+    Env.session(8, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.queryExecutionListeners" -> "graft.CaptureListener")
 
   override def afterAll(): Unit = spark.stop()
 

@@ -331,8 +331,7 @@ class WasmRuntimeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("one warm thread drives many batches through ONE pooled instance " +
-    "(allocation churn removed; fresh-instance fallback via " +
-    "-Dgraft.wasm.pool=off keeps the old path)") {
+    "(allocation churn removed)") {
     assume(artifactPresent)
     val payload = ArrowBatchCodec.encode(IndexedSeq(
       Array[Any](2.0), Array[Any](10.0)), 1)

@@ -180,14 +180,9 @@ class ZstdDictSpec extends AnyFunSuite {
 
   test("column API: graft_zstd_dict and graft_zstd_cc run inside " +
     "whole-stage codegen over a DataFrame") {
-    // own session, STOPPED at the end: a leaked extension-less session
-    // would be reused by a later suite's getOrCreate and break its
-    // graft DDL parsing
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("zstd-dict-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // own session, STOPPED at the end: a leaked session would be reused
+    // by a later suite's getOrCreate with this one's 2-core conf
+    val spark = graft.Env.session(2)
     try {
     import spark.implicits._
     val dict = trainDict(5)

@@ -159,11 +159,7 @@ class ZstdSeekSpec extends AnyFunSuite {
     val docs = (0 until 64).map(i => english(500 + 37 * i, 1000 + i))
     val frames = docs.map(d => com.github.luben.zstd.Zstd.compress(d, 6))
     val blob = withSeekTable(frames, docs.map(_.length))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("zstd-seek-split")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Env.session(4)
     try {
       import org.apache.spark.sql.functions.{posexplode, spark_partition_id}
       import spark.implicits._
@@ -189,11 +185,7 @@ class ZstdSeekSpec extends AnyFunSuite {
     val docs = (1 to 4).map(i => new String(english(600, 600 + i), "UTF-8"))
     val frames = docs.map(d => com.github.luben.zstd.Zstd.compress(d.getBytes("UTF-8"), 9))
     val blob = withSeekTable(frames, docs.map(_.getBytes("UTF-8").length))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("zstd-seek-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Env.session(2)
     try {
       import spark.implicits._
       val df = docs.indices.map(k => (k.toLong, blob)).toDF("k", "blob")
