@@ -19,12 +19,14 @@ final case class WasmTrap(msg: String) extends RuntimeException(msg)
   *  - linear memory as a byte array behind a little-endian ByteBuffer,
   *    grown by `memory.grow` up to [[WasmInstance.MaxPages]].
   *
-  * One instance = one isolated guest "VM" with fresh memory/globals. The
-  * runtime creates an instance per invocation, so guest allocations cannot
-  * leak across batches and concurrent Spark tasks never share mutable guest
-  * state — observationally equivalent to the reference's one-VM-behind-a-
-  * mutex discipline (wasmedge_factory/src/lib.rs:79-100) for the pure
-  * functions this ABI carries, and strictly safer at executor concurrency.
+  * One instance = one isolated guest "VM" with its own memory/globals. The
+  * runtime pools one instance per thread and module
+  * (`WasmRuntime.instanceFor`) and [[reset]]s it after every invocation,
+  * so guest allocations cannot leak across batches and concurrent Spark
+  * tasks never share mutable guest state — observationally equivalent to
+  * the reference's one-VM-behind-a-mutex discipline
+  * (wasmedge_factory/src/lib.rs:79-100) for the pure functions this ABI
+  * carries, and strictly safer at executor concurrency.
   */
 final class WasmInstance(val module: WasmModule) {
   import WasmInstance._
@@ -375,17 +377,29 @@ final class WasmInstance(val module: WasmModule) {
         case 0x503 => // select over v128 operands: [a.lo a.hi b.lo b.hi c]
           sp -= 3
           if (st(sp + 2) == 0) { st(sp - 2) = st(sp); st(sp - 1) = st(sp + 1) }
-        case other => sp = slowPath(other, argM(i), argL(i), sp)
+        case other =>
+          sp = if (other >= 0x300) simdOp(other, argM(i), argL(i), sp)
+            else if (other >= 0x200) fcOp(other, sp)
+            else scalarOp(other, argM(i), sp)
       }
       i += 1
     }
   }
 
-  /** Colder opcodes, split out so the dispatch loop stays under the JIT's
-    * huge-method bytecode limit and actually compiles to native code —
-    * one method over ~8000 bytecodes would silently fall back to the
-    * JVM's bytecode interpreter and cost ~50x. Returns the new sp. */
-  private def slowPath(op: Int, m: Int, l: Long, sp0: Int): Int = {
+  /* The cold opcodes live outside `call`, in one method per encoding
+   * family: [[scalarOp]] (one-byte MVP ops), [[fcOp]] (the 0xFC prefix,
+   * decoded as 0x200|sub) and [[simdOp]] (the 0xFD prefix, 0x300|sub).
+   * HotSpot never JIT-compiles a method with more than 8,000 bytes of
+   * bytecode (`HugeMethodLimit`, enforced while `DontCompileHugeMethods`
+   * is on, the default): such a method runs in the JVM's bytecode
+   * interpreter for the JVM's whole life (the SIMD guest ran ~35x slower
+   * so). One cold method reached 13,305 bytes once the v128 arms landed,
+   * hence one method per family, and WasmInterpreterSpec's
+   * HugeMethodLimit test fails on any main method over the limit. Every
+   * arm matches exact opcodes (no guards, which would turn the match into
+   * a compare chain) and none allocates. Each returns the new sp. */
+
+  private def scalarOp(op: Int, m: Int, sp0: Int): Int = {
     var sp = sp0
     (op: @annotation.switch) match {
       case 0x2A => stack(sp - 1) = bb.getInt(checkAddr(stack(sp - 1), m, 4)).toLong & M32
@@ -593,6 +607,14 @@ final class WasmInstance(val module: WasmModule) {
       case 0xC2 => stack(sp - 1) = stack(sp - 1).toByte.toLong
       case 0xC3 => stack(sp - 1) = stack(sp - 1).toShort.toLong
       case 0xC4 => stack(sp - 1) = stack(sp - 1).toInt.toLong
+      case other => throw WasmTrap(f"unimplemented opcode 0x$other%02x")
+    }
+    sp
+  }
+
+  private def fcOp(op: Int, sp0: Int): Int = {
+    var sp = sp0
+    (op: @annotation.switch) match {
       // ---- 0xFC saturating truncations (decoded as 0x200|sub, r18):
       // Java's primitive narrowing IS the spec'd behavior for the signed
       // forms (trunc toward zero, NaN→0, saturate at the type bounds) ----
@@ -619,132 +641,102 @@ final class WasmInstance(val module: WasmModule) {
         val n = stack(sp + 2) & M32
         if (dst + n > mem.length) throw WasmTrap(s"oob memory.fill @$dst+$n")
         java.util.Arrays.fill(mem, dst.toInt, (dst + n).toInt, v)
-      // ---- 0xFD SIMD v128 core (r19, decoded as 0x300|sub): a v128 is
-      // two adjacent Long slots (lo = lanes 0..1, hi = lanes 2..3 for
-      // i32x4; lo/hi = lanes 0/1 for i64x2/f64x2). `m` carries the
-      // memarg offset (load/store) or the lane immediate. ----
+      case other => throw WasmTrap(f"unimplemented opcode 0x$other%02x")
+    }
+    sp
+  }
+
+  /** 0xFD SIMD v128 core (r19): a v128 is two adjacent Long slots (lo =
+    * lanes 0..1, hi = lanes 2..3 for i32x4; lo/hi = lanes 0/1 for
+    * i64x2/f64x2). `m` carries the memarg offset (load/store) or the lane
+    * immediate; `l` the lane of load/store_lane. The lane arithmetic is in
+    * the companion's pure helpers, one 64-bit half at a time. */
+  private def simdOp(op: Int, m: Int, l: Long, sp0: Int): Int = {
+    var sp = sp0
+    (op: @annotation.switch) match {
       case 0x300 => // v128.load
         val a = checkAddr(stack(sp - 1), m, 16)
         stack(sp - 1) = bb.getLong(a); stack(sp) = bb.getLong(a + 8); sp += 1
-      case op if op >= 0x301 && op <= 0x306 => // load 8x8/16x4/32x2_{s,u}
-        val a = checkAddr(stack(sp - 1), m, 8)
-        val w = bb.getLong(a)
-        @inline def ext(shift: Int, bits: Int, signed: Boolean): Long = {
-          val v = (w >>> shift) & ((1L << bits) - 1)
-          if (signed) (v << (64 - bits)) >> (64 - bits) else v
-        }
-        val (lo, hi) = op match {
-          case 0x301 | 0x302 => // 8 bytes → 8×i16 lanes
-            val s0 = op == 0x301
-            def p(k: Int) = ext(8 * k, 8, s0) & 0xFFFFL
-            (p(0) | (p(1) << 16) | (p(2) << 32) | (p(3) << 48),
-              p(4) | (p(5) << 16) | (p(6) << 32) | (p(7) << 48))
-          case 0x303 | 0x304 => // 4×i16 → 4×i32
-            val s0 = op == 0x303
-            def p(k: Int) = ext(16 * k, 16, s0) & M32
-            (p(0) | (p(1) << 32), p(2) | (p(3) << 32))
-          case _ => // 2×i32 → 2×i64
-            val s0 = op == 0x305
-            (ext(0, 32, s0), ext(32, 32, s0))
-        }
-        stack(sp - 1) = lo; stack(sp) = hi; sp += 1
-      case op if op >= 0x307 && op <= 0x30A => // load{8,16,32,64}_splat
-        op match {
-          case 0x307 =>
-            val a = checkAddr(stack(sp - 1), m, 1)
-            val v = (mem(a) & 0xFFL) * 0x0101010101010101L
-            stack(sp - 1) = v; stack(sp) = v
-          case 0x308 =>
-            val a = checkAddr(stack(sp - 1), m, 2)
-            val v = (bb.getShort(a) & 0xFFFFL) * 0x0001000100010001L
-            stack(sp - 1) = v; stack(sp) = v
-          case 0x309 =>
-            val a = checkAddr(stack(sp - 1), m, 4)
-            val x = bb.getInt(a).toLong & M32
-            val v = x | (x << 32)
-            stack(sp - 1) = v; stack(sp) = v
-          case _ =>
-            val a = checkAddr(stack(sp - 1), m, 8)
-            val v = bb.getLong(a)
-            stack(sp - 1) = v; stack(sp) = v
-        }
-        sp += 1
+      case 0x301 | 0x302 => // load8x8_{s,u}: 8 bytes → 8×i16 lanes
+        val w = bb.getLong(checkAddr(stack(sp - 1), m, 8))
+        val s = op == 0x301
+        stack(sp - 1) = widen8x4(w, s); stack(sp) = widen8x4(w >>> 32, s); sp += 1
+      case 0x303 | 0x304 => // load16x4_{s,u}: 4×i16 → 4×i32
+        val w = bb.getLong(checkAddr(stack(sp - 1), m, 8))
+        val s = op == 0x303
+        stack(sp - 1) = widen16x2(w, s); stack(sp) = widen16x2(w >>> 32, s); sp += 1
+      case 0x305 => // load32x2_s: 2×i32 → 2×i64
+        val w = bb.getLong(checkAddr(stack(sp - 1), m, 8))
+        stack(sp - 1) = w.toInt.toLong; stack(sp) = w >> 32; sp += 1
+      case 0x306 => // load32x2_u
+        val w = bb.getLong(checkAddr(stack(sp - 1), m, 8))
+        stack(sp - 1) = w & M32; stack(sp) = w >>> 32; sp += 1
+      case 0x307 => // load8_splat
+        val v = (mem(checkAddr(stack(sp - 1), m, 1)) & 0xFFL) * 0x0101010101010101L
+        stack(sp - 1) = v; stack(sp) = v; sp += 1
+      case 0x308 => // load16_splat
+        val v = (bb.getShort(checkAddr(stack(sp - 1), m, 2)) & 0xFFFFL) * 0x0001000100010001L
+        stack(sp - 1) = v; stack(sp) = v; sp += 1
+      case 0x309 => // load32_splat
+        val x = bb.getInt(checkAddr(stack(sp - 1), m, 4)).toLong & M32
+        val v = x | (x << 32)
+        stack(sp - 1) = v; stack(sp) = v; sp += 1
+      case 0x30A => // load64_splat
+        val v = bb.getLong(checkAddr(stack(sp - 1), m, 8))
+        stack(sp - 1) = v; stack(sp) = v; sp += 1
       case 0x35C => // v128.load32_zero
         val a = checkAddr(stack(sp - 1), m, 4)
         stack(sp - 1) = bb.getInt(a).toLong & M32; stack(sp) = 0L; sp += 1
       case 0x35D => // v128.load64_zero
         val a = checkAddr(stack(sp - 1), m, 8)
         stack(sp - 1) = bb.getLong(a); stack(sp) = 0L; sp += 1
-      case op if op >= 0x354 && op <= 0x357 => // load{8,16,32,64}_lane
-        // stack: [vec.lo vec.hi addr]; l = lane; result replaces the lane
+      // load{8,16,32,64}_lane — stack: [vec.lo vec.hi addr]; the loaded
+      // value replaces lane `l`
+      case 0x354 =>
         sp -= 1
         val lane = l.toInt
-        op match {
-          case 0x354 =>
-            val a = checkAddr(stack(sp), m, 1)
-            val s = sp - 2 + (lane >> 3)
-            val sh = 8 * (lane & 7)
-            stack(s) = (stack(s) & ~(0xFFL << sh)) | ((mem(a) & 0xFFL) << sh)
-          case 0x355 =>
-            val a = checkAddr(stack(sp), m, 2)
-            val s = sp - 2 + (lane >> 2)
-            val sh = 16 * (lane & 3)
-            stack(s) = (stack(s) & ~(0xFFFFL << sh)) |
-              ((bb.getShort(a) & 0xFFFFL) << sh)
-          case 0x356 =>
-            val a = checkAddr(stack(sp), m, 4)
-            val s = sp - 2 + (lane >> 1)
-            val sh = 32 * (lane & 1)
-            stack(s) = (stack(s) & ~(M32 << sh)) |
-              ((bb.getInt(a).toLong & M32) << sh)
-          case _ =>
-            val a = checkAddr(stack(sp), m, 8)
-            stack(sp - 2 + (lane & 1)) = bb.getLong(a)
-        }
-      case op if op >= 0x358 && op <= 0x35B => // store{8,16,32,64}_lane
-        // stack: [addr vec.lo vec.hi]; l = lane
+        val a = checkAddr(stack(sp), m, 1)
+        val s = sp - 2 + (lane >> 3)
+        val sh = 8 * (lane & 7)
+        stack(s) = (stack(s) & ~(0xFFL << sh)) | ((mem(a) & 0xFFL) << sh)
+      case 0x355 =>
+        sp -= 1
+        val lane = l.toInt
+        val a = checkAddr(stack(sp), m, 2)
+        val s = sp - 2 + (lane >> 2)
+        val sh = 16 * (lane & 3)
+        stack(s) = (stack(s) & ~(0xFFFFL << sh)) | ((bb.getShort(a) & 0xFFFFL) << sh)
+      case 0x356 =>
+        sp -= 1
+        val lane = l.toInt
+        val a = checkAddr(stack(sp), m, 4)
+        val s = sp - 2 + (lane >> 1)
+        val sh = 32 * (lane & 1)
+        stack(s) = (stack(s) & ~(M32 << sh)) | ((bb.getInt(a).toLong & M32) << sh)
+      case 0x357 =>
+        sp -= 1
+        val a = checkAddr(stack(sp), m, 8)
+        stack(sp - 2 + (l.toInt & 1)) = bb.getLong(a)
+      // store{8,16,32,64}_lane — stack: [addr vec.lo vec.hi]
+      case 0x358 =>
         sp -= 3
         val lane = l.toInt
-        op match {
-          case 0x358 =>
-            val a = checkAddr(stack(sp), m, 1)
-            mem(a) = ((stack(sp + 1 + (lane >> 3)) >>> (8 * (lane & 7))) & 0xFF).toByte
-          case 0x359 =>
-            val a = checkAddr(stack(sp), m, 2)
-            bb.putShort(a,
-              ((stack(sp + 1 + (lane >> 2)) >>> (16 * (lane & 3))) & 0xFFFF).toShort)
-          case 0x35A =>
-            val a = checkAddr(stack(sp), m, 4)
-            bb.putInt(a,
-              ((stack(sp + 1 + (lane >> 1)) >>> (32 * (lane & 1))) & M32).toInt)
-          case _ =>
-            val a = checkAddr(stack(sp), m, 8)
-            bb.putLong(a, stack(sp + 1 + (lane & 1)))
-        }
-      case op if op == 0x367 || op == 0x368 || op == 0x369 || op == 0x36A => // f32x4 round
-        @inline def f(v: Long) = java.lang.Float.intBitsToFloat(v.toInt)
-        @inline def lb(v: Float) =
-          java.lang.Float.floatToRawIntBits(v).toLong & M32
-        @inline def rd(v: Float): Float = op match {
-          case 0x367 => math.ceil(v.toDouble).toFloat
-          case 0x368 => math.floor(v.toDouble).toFloat
-          case 0x369 => truncD(v.toDouble).toFloat
-          case _ => math.rint(v.toDouble).toFloat
-        }
-        @inline def lanes(w: Long): Long = lb(rd(f(w))) | (lb(rd(f(w >>> 32))) << 32)
-        stack(sp - 2) = lanes(stack(sp - 2))
-        stack(sp - 1) = lanes(stack(sp - 1))
-      case op if op == 0x374 || op == 0x375 || op == 0x37A || op == 0x394 => // f64x2 round
-        @inline def rd(v: Double): Double = op match {
-          case 0x374 => math.ceil(v)
-          case 0x375 => math.floor(v)
-          case 0x37A => truncD(v)
-          case _ => math.rint(v)
-        }
-        @inline def one(w: Long): Long = java.lang.Double.doubleToRawLongBits(
-          rd(java.lang.Double.longBitsToDouble(w)))
-        stack(sp - 2) = one(stack(sp - 2))
-        stack(sp - 1) = one(stack(sp - 1))
+        val a = checkAddr(stack(sp), m, 1)
+        mem(a) = ((stack(sp + 1 + (lane >> 3)) >>> (8 * (lane & 7))) & 0xFF).toByte
+      case 0x359 =>
+        sp -= 3
+        val lane = l.toInt
+        val a = checkAddr(stack(sp), m, 2)
+        bb.putShort(a, ((stack(sp + 1 + (lane >> 2)) >>> (16 * (lane & 3))) & 0xFFFF).toShort)
+      case 0x35A =>
+        sp -= 3
+        val lane = l.toInt
+        val a = checkAddr(stack(sp), m, 4)
+        bb.putInt(a, ((stack(sp + 1 + (lane >> 1)) >>> (32 * (lane & 1))) & M32).toInt)
+      case 0x35B =>
+        sp -= 3
+        val a = checkAddr(stack(sp), m, 8)
+        bb.putLong(a, stack(sp + 1 + (l.toInt & 1)))
       case 0x30B => // v128.store
         sp -= 3
         val a = checkAddr(stack(sp), m, 16)
@@ -769,129 +761,25 @@ final class WasmInstance(val module: WasmModule) {
         val w = stack(sp - 2 + (m & 1)); sp -= 1; stack(sp - 1) = w
       case 0x31E | 0x322 => // i64x2/f64x2.replace_lane
         sp -= 1; stack(sp - 2 + (m & 1)) = stack(sp)
-      case op if op >= 0x337 && op <= 0x340 => // i32x4 compares
+      // ---- compares: all-ones / all-zeros lane masks ----
+      case 0x337 | 0x338 | 0x339 | 0x33A | 0x33B | 0x33C | 0x33D | 0x33E |
+          0x33F | 0x340 => // i32x4 eq ne lt_s lt_u gt_s gt_u le_s le_u ge_s ge_u
         sp -= 2
-        @inline def cmp(a: Int, b: Int): Boolean = (op - 0x337) match {
-          case 0 => a == b
-          case 1 => a != b
-          case 2 => a < b
-          case 3 => Integer.compareUnsigned(a, b) < 0
-          case 4 => a > b
-          case 5 => Integer.compareUnsigned(a, b) > 0
-          case 6 => a <= b
-          case 7 => Integer.compareUnsigned(a, b) <= 0
-          case 8 => a >= b
-          case _ => Integer.compareUnsigned(a, b) >= 0
-        }
-        @inline def lanes(a: Long, b: Long): Long =
-          (if (cmp(a.toInt, b.toInt)) M32 else 0L) |
-            (if (cmp((a >>> 32).toInt, (b >>> 32).toInt)) M32 << 32 else 0L)
-        val r0 = lanes(stack(sp - 2), stack(sp))
-        val r1 = lanes(stack(sp - 1), stack(sp + 1))
-        stack(sp - 2) = r0; stack(sp - 1) = r1
-      case op if op >= 0x341 && op <= 0x346 => // f32x4 compares
+        stack(sp - 2) = i32x2Cmp(op, stack(sp - 2), stack(sp))
+        stack(sp - 1) = i32x2Cmp(op, stack(sp - 1), stack(sp + 1))
+      case 0x341 | 0x342 | 0x343 | 0x344 | 0x345 | 0x346 => // f32x4 eq ne lt gt le ge
         sp -= 2
-        @inline def cmp(a: Float, b: Float): Boolean = (op - 0x341) match {
-          case 0 => a == b
-          case 1 => a != b
-          case 2 => a < b
-          case 3 => a > b
-          case 4 => a <= b
-          case _ => a >= b
-        }
-        @inline def lanes(a: Long, b: Long): Long = {
-          @inline def f(v: Long) = java.lang.Float.intBitsToFloat(v.toInt)
-          (if (cmp(f(a), f(b))) M32 else 0L) |
-            (if (cmp(f(a >>> 32), f(b >>> 32))) M32 << 32 else 0L)
-        }
-        val r0 = lanes(stack(sp - 2), stack(sp))
-        val r1 = lanes(stack(sp - 1), stack(sp + 1))
-        stack(sp - 2) = r0; stack(sp - 1) = r1
-      case op if (op >= 0x3E0 && op <= 0x3EB) && op != 0x3E2 => // f32x4
-        @inline def f(v: Long) = java.lang.Float.intBitsToFloat(v.toInt)
-        @inline def lb(v: Float) =
-          java.lang.Float.floatToRawIntBits(v).toLong & M32
-        if (op <= 0x3E3) { // abs / neg / sqrt
-          @inline def un(v: Float): Float = op match {
-            case 0x3E0 => math.abs(v)
-            case 0x3E1 => -v
-            case _ => math.sqrt(v.toDouble).toFloat
-          }
-          @inline def lanes(w: Long): Long =
-            lb(un(f(w))) | (lb(un(f(w >>> 32))) << 32)
-          stack(sp - 2) = lanes(stack(sp - 2))
-          stack(sp - 1) = lanes(stack(sp - 1))
-        } else {
-          sp -= 2
-          @inline def bin(a: Float, b: Float): Float = op match {
-            case 0x3E4 => a + b
-            case 0x3E5 => a - b
-            case 0x3E6 => a * b
-            case 0x3E7 => a / b
-            case 0x3E8 => // min: NaN-propagating, -0 < +0
-              if (a.isNaN || b.isNaN) Float.NaN
-              else if (a == 0.0f && b == 0.0f)
-                if ((java.lang.Float.floatToRawIntBits(a) |
-                  java.lang.Float.floatToRawIntBits(b)) < 0) -0.0f else 0.0f
-              else math.min(a, b)
-            case 0x3E9 =>
-              if (a.isNaN || b.isNaN) Float.NaN
-              else if (a == 0.0f && b == 0.0f)
-                if ((java.lang.Float.floatToRawIntBits(a) &
-                  java.lang.Float.floatToRawIntBits(b)) < 0) -0.0f else 0.0f
-              else math.max(a, b)
-            case 0x3EA => if (b < a) b else a // pmin
-            case _ => if (a < b) b else a     // pmax
-          }
-          @inline def lanes(x: Long, y: Long): Long =
-            lb(bin(f(x), f(y))) | (lb(bin(f(x >>> 32), f(y >>> 32))) << 32)
-          val r0 = lanes(stack(sp - 2), stack(sp))
-          val r1 = lanes(stack(sp - 1), stack(sp + 1))
-          stack(sp - 2) = r0; stack(sp - 1) = r1
-        }
-      case op if op >= 0x3F8 && op <= 0x3FB => // i32x4<->f32x4 conversions
-        @inline def f(v: Long) = java.lang.Float.intBitsToFloat(v.toInt)
-        @inline def lanes(w: Long, one: Long => Long): Long =
-          (one(w & M32) & M32) | ((one(w >>> 32) & M32) << 32)
-        val one: Long => Long = op match {
-          case 0x3F8 => v => f(v).toInt.toLong // trunc_sat_f32x4_s
-          case 0x3F9 => v => satU32(f(v).toDouble) // trunc_sat_f32x4_u
-          case 0x3FA => v =>
-            java.lang.Float.floatToRawIntBits(v.toInt.toFloat).toLong
-          case _ => v =>
-            java.lang.Float.floatToRawIntBits((v & M32).toFloat).toLong
-        }
-        stack(sp - 2) = lanes(stack(sp - 2), one)
-        stack(sp - 1) = lanes(stack(sp - 1), one)
-      case op if op >= 0x347 && op <= 0x34C => // f64x2 compares
+        stack(sp - 2) = f32x2Cmp(op, stack(sp - 2), stack(sp))
+        stack(sp - 1) = f32x2Cmp(op, stack(sp - 1), stack(sp + 1))
+      case 0x347 | 0x348 | 0x349 | 0x34A | 0x34B | 0x34C => // f64x2 eq ne lt gt le ge
         sp -= 2
-        @inline def cmp(a: Double, b: Double): Boolean = (op - 0x347) match {
-          case 0 => a == b
-          case 1 => a != b
-          case 2 => a < b
-          case 3 => a > b
-          case 4 => a <= b
-          case _ => a >= b
-        }
-        @inline def lane(ab: Long, bb2: Long): Long =
-          if (cmp(java.lang.Double.longBitsToDouble(ab),
-            java.lang.Double.longBitsToDouble(bb2))) -1L else 0L
-        val r0 = lane(stack(sp - 2), stack(sp))
-        val r1 = lane(stack(sp - 1), stack(sp + 1))
-        stack(sp - 2) = r0; stack(sp - 1) = r1
-      case op if op >= 0x3D6 && op <= 0x3DB => // i64x2 compares
+        stack(sp - 2) = f64Cmp(op, stack(sp - 2), stack(sp))
+        stack(sp - 1) = f64Cmp(op, stack(sp - 1), stack(sp + 1))
+      case 0x3D6 | 0x3D7 | 0x3D8 | 0x3D9 | 0x3DA | 0x3DB => // i64x2 eq ne lt gt le ge
         sp -= 2
-        @inline def cmp(a: Long, b: Long): Boolean = (op - 0x3D6) match {
-          case 0 => a == b
-          case 1 => a != b
-          case 2 => a < b
-          case 3 => a > b
-          case 4 => a <= b
-          case _ => a >= b
-        }
-        val r0 = if (cmp(stack(sp - 2), stack(sp))) -1L else 0L
-        val r1 = if (cmp(stack(sp - 1), stack(sp + 1))) -1L else 0L
-        stack(sp - 2) = r0; stack(sp - 1) = r1
+        stack(sp - 2) = i64Cmp(op, stack(sp - 2), stack(sp))
+        stack(sp - 1) = i64Cmp(op, stack(sp - 1), stack(sp + 1))
+      // ---- bitwise ----
       case 0x34D => // v128.not
         stack(sp - 2) = ~stack(sp - 2); stack(sp - 1) = ~stack(sp - 1)
       case 0x34E => // v128.and
@@ -914,20 +802,9 @@ final class WasmInstance(val module: WasmModule) {
       case 0x353 => // v128.any_true
         sp -= 1
         stack(sp - 1) = b2l((stack(sp - 1) | stack(sp)) != 0L)
-      case 0x3A0 => // i32x4.abs
-        @inline def ab(w: Long): Long = {
-          val l = math.abs(w.toInt).toLong & M32
-          val h = math.abs((w >>> 32).toInt).toLong & M32
-          l | (h << 32)
-        }
-        stack(sp - 2) = ab(stack(sp - 2)); stack(sp - 1) = ab(stack(sp - 1))
-      case 0x3A1 => // i32x4.neg
-        @inline def ng(w: Long): Long = {
-          val l = (-w.toInt).toLong & M32
-          val h = (-(w >>> 32).toInt).toLong & M32
-          l | (h << 32)
-        }
-        stack(sp - 2) = ng(stack(sp - 2)); stack(sp - 1) = ng(stack(sp - 1))
+      // ---- i32x4 ----
+      case 0x3A0 | 0x3A1 => // i32x4.abs / neg
+        stack(sp - 2) = i32x2Un(op, stack(sp - 2)); stack(sp - 1) = i32x2Un(op, stack(sp - 1))
       case 0x3A3 => // i32x4.all_true
         sp -= 1
         val lo = stack(sp - 1); val hi = stack(sp)
@@ -938,38 +815,17 @@ final class WasmInstance(val module: WasmModule) {
         val lo = stack(sp - 1); val hi = stack(sp)
         stack(sp - 1) = (((lo >>> 31) & 1) | ((lo >>> 62) & 2) |
           ((hi >>> 29) & 4) | ((hi >>> 60) & 8))
-      case op if op >= 0x3AB && op <= 0x3AD => // i32x4 shl/shr_s/shr_u
+      case 0x3AB | 0x3AC | 0x3AD => // i32x4 shl / shr_s / shr_u
         sp -= 1
         val k = (stack(sp) & 31).toInt
-        @inline def sh(w: Long): Long = {
-          val a = w.toInt; val b = (w >>> 32).toInt
-          val (ra, rb) = (op - 0x3AB) match {
-            case 0 => (a << k, b << k)
-            case 1 => (a >> k, b >> k)
-            case _ => (a >>> k, b >>> k)
-          }
-          (ra.toLong & M32) | ((rb.toLong & M32) << 32)
-        }
-        stack(sp - 2) = sh(stack(sp - 2)); stack(sp - 1) = sh(stack(sp - 1))
-      case op if (op >= 0x3AE && op <= 0x3B9) &&
-          (op == 0x3AE || op == 0x3B1 || op == 0x3B5 ||
-            (op >= 0x3B6 && op <= 0x3B9)) => // i32x4 add/sub/mul/min/max
+        stack(sp - 2) = i32x2Shift(op, stack(sp - 2), k)
+        stack(sp - 1) = i32x2Shift(op, stack(sp - 1), k)
+      case 0x3AE | 0x3B1 | 0x3B5 | 0x3B6 | 0x3B7 | 0x3B8 | 0x3B9 =>
+        // i32x4 add sub mul min_s min_u max_s max_u
         sp -= 2
-        @inline def bin(a: Int, b: Int): Int = op match {
-          case 0x3AE => a + b
-          case 0x3B1 => a - b
-          case 0x3B5 => a * b
-          case 0x3B6 => math.min(a, b)
-          case 0x3B7 => if (Integer.compareUnsigned(a, b) <= 0) a else b
-          case 0x3B8 => math.max(a, b)
-          case _ => if (Integer.compareUnsigned(a, b) >= 0) a else b
-        }
-        @inline def lanes(a: Long, b: Long): Long =
-          (bin(a.toInt, b.toInt).toLong & M32) |
-            ((bin((a >>> 32).toInt, (b >>> 32).toInt).toLong & M32) << 32)
-        val r0 = lanes(stack(sp - 2), stack(sp))
-        val r1 = lanes(stack(sp - 1), stack(sp + 1))
-        stack(sp - 2) = r0; stack(sp - 1) = r1
+        stack(sp - 2) = i32x2Bin(op, stack(sp - 2), stack(sp))
+        stack(sp - 1) = i32x2Bin(op, stack(sp - 1), stack(sp + 1))
+      // ---- i64x2 ----
       case 0x3C0 => // i64x2.abs
         stack(sp - 2) = math.abs(stack(sp - 2))
         stack(sp - 1) = math.abs(stack(sp - 1))
@@ -981,15 +837,18 @@ final class WasmInstance(val module: WasmModule) {
       case 0x3C4 => // i64x2.bitmask
         sp -= 1
         stack(sp - 1) = ((stack(sp - 1) >>> 63) | ((stack(sp) >>> 62) & 2))
-      case op if op >= 0x3CB && op <= 0x3CD => // i64x2 shl/shr_s/shr_u
+      case 0x3CB => // i64x2.shl
         sp -= 1
         val k = (stack(sp) & 63).toInt
-        @inline def sh(w: Long): Long = (op - 0x3CB) match {
-          case 0 => w << k
-          case 1 => w >> k
-          case _ => w >>> k
-        }
-        stack(sp - 2) = sh(stack(sp - 2)); stack(sp - 1) = sh(stack(sp - 1))
+        stack(sp - 2) = stack(sp - 2) << k; stack(sp - 1) = stack(sp - 1) << k
+      case 0x3CC => // i64x2.shr_s
+        sp -= 1
+        val k = (stack(sp) & 63).toInt
+        stack(sp - 2) = stack(sp - 2) >> k; stack(sp - 1) = stack(sp - 1) >> k
+      case 0x3CD => // i64x2.shr_u
+        sp -= 1
+        val k = (stack(sp) & 63).toInt
+        stack(sp - 2) = stack(sp - 2) >>> k; stack(sp - 1) = stack(sp - 1) >>> k
       case 0x3CE => // i64x2.add
         sp -= 2
         stack(sp - 2) += stack(sp); stack(sp - 1) += stack(sp + 1)
@@ -999,41 +858,27 @@ final class WasmInstance(val module: WasmModule) {
       case 0x3D5 => // i64x2.mul
         sp -= 2
         stack(sp - 2) *= stack(sp); stack(sp - 1) *= stack(sp + 1)
-      case op if op >= 0x3EC && op <= 0x3F7 => // f64x2 unary + arith
-        @inline def d(v: Long): Double = java.lang.Double.longBitsToDouble(v)
-        @inline def l(v: Double): Long = java.lang.Double.doubleToRawLongBits(v)
-        if (op <= 0x3EF) { // abs / neg / (ceil,floor unsupported) / sqrt
-          @inline def un(v: Double): Double = op match {
-            case 0x3EC => math.abs(v)
-            case 0x3ED => -v
-            case _ => math.sqrt(v)
-          }
-          stack(sp - 2) = l(un(d(stack(sp - 2))))
-          stack(sp - 1) = l(un(d(stack(sp - 1))))
-        } else {
-          sp -= 2
-          @inline def bin(a: Double, b: Double): Double = op match {
-            case 0x3F0 => a + b
-            case 0x3F1 => a - b
-            case 0x3F2 => a * b
-            case 0x3F3 => a / b
-            case 0x3F4 => // min: NaN-propagating, -0 < +0 (spec fmin)
-              if (a.isNaN || b.isNaN) Double.NaN
-              else if (a == 0.0 && b == 0.0)
-                if ((l(a) | l(b)) < 0) -0.0 else 0.0
-              else math.min(a, b)
-            case 0x3F5 =>
-              if (a.isNaN || b.isNaN) Double.NaN
-              else if (a == 0.0 && b == 0.0)
-                if ((l(a) & l(b)) < 0) -0.0 else 0.0
-              else math.max(a, b)
-            case 0x3F6 => if (b < a) b else a // pmin
-            case _ => if (a < b) b else a     // pmax
-          }
-          val r0 = l(bin(d(stack(sp - 2)), d(stack(sp))))
-          val r1 = l(bin(d(stack(sp - 1)), d(stack(sp + 1))))
-          stack(sp - 2) = r0; stack(sp - 1) = r1
-        }
+      // ---- f32x4 ----
+      case 0x367 | 0x368 | 0x369 | 0x36A => // f32x4 ceil floor trunc nearest
+        stack(sp - 2) = f32x2Un(op, stack(sp - 2)); stack(sp - 1) = f32x2Un(op, stack(sp - 1))
+      case 0x3E0 | 0x3E1 | 0x3E3 => // f32x4 abs neg sqrt
+        stack(sp - 2) = f32x2Un(op, stack(sp - 2)); stack(sp - 1) = f32x2Un(op, stack(sp - 1))
+      case 0x3E4 | 0x3E5 | 0x3E6 | 0x3E7 | 0x3E8 | 0x3E9 | 0x3EA | 0x3EB =>
+        // f32x4 add sub mul div min max pmin pmax
+        sp -= 2
+        stack(sp - 2) = f32x2Bin(op, stack(sp - 2), stack(sp))
+        stack(sp - 1) = f32x2Bin(op, stack(sp - 1), stack(sp + 1))
+      case 0x3F8 | 0x3F9 | 0x3FA | 0x3FB => // i32x4<->f32x4 conversions
+        stack(sp - 2) = i32f32Cvt(op, stack(sp - 2)); stack(sp - 1) = i32f32Cvt(op, stack(sp - 1))
+      // ---- f64x2 ----
+      case 0x374 | 0x375 | 0x37A | 0x394 | 0x3EC | 0x3ED | 0x3EF =>
+        // f64x2 ceil floor trunc nearest abs neg sqrt
+        stack(sp - 2) = f64Un(op, stack(sp - 2)); stack(sp - 1) = f64Un(op, stack(sp - 1))
+      case 0x3F0 | 0x3F1 | 0x3F2 | 0x3F3 | 0x3F4 | 0x3F5 | 0x3F6 | 0x3F7 =>
+        // f64x2 add sub mul div min max pmin pmax
+        sp -= 2
+        stack(sp - 2) = f64Bin(op, stack(sp - 2), stack(sp))
+        stack(sp - 1) = f64Bin(op, stack(sp - 1), stack(sp + 1))
       case 0x3FC => // i32x4.trunc_sat_f64x2_s_zero
         val d0 = java.lang.Double.longBitsToDouble(stack(sp - 2))
         val d1 = java.lang.Double.longBitsToDouble(stack(sp - 1))
@@ -1047,14 +892,11 @@ final class WasmInstance(val module: WasmModule) {
       case 0x3FE => // f64x2.convert_low_i32x4_s
         val lo = stack(sp - 2)
         stack(sp - 2) = java.lang.Double.doubleToRawLongBits(lo.toInt.toDouble)
-        stack(sp - 1) = java.lang.Double.doubleToRawLongBits(
-          (lo >> 32).toInt.toDouble)
+        stack(sp - 1) = java.lang.Double.doubleToRawLongBits((lo >> 32).toInt.toDouble)
       case 0x3FF => // f64x2.convert_low_i32x4_u
         val lo = stack(sp - 2)
-        stack(sp - 2) = java.lang.Double.doubleToRawLongBits(
-          (lo & M32).toDouble)
-        stack(sp - 1) = java.lang.Double.doubleToRawLongBits(
-          (lo >>> 32).toDouble)
+        stack(sp - 2) = java.lang.Double.doubleToRawLongBits((lo & M32).toDouble)
+        stack(sp - 1) = java.lang.Double.doubleToRawLongBits((lo >>> 32).toDouble)
       case other => throw WasmTrap(f"unimplemented opcode 0x$other%02x")
     }
     sp
@@ -1099,4 +941,197 @@ object WasmInstance {
     if (d >= 1.8446744073709552E19) -1L
     else if (d > -1.0) d2u64(d)
     else 0L
+
+  // ---- v128 lane helpers: pure functions of one 64-bit half (two i32 or
+  // f32 lanes, or one i64/f64 lane), selected by the exact opcode ----
+
+  @inline private def f32Lo(w: Long): Float = java.lang.Float.intBitsToFloat(w.toInt)
+  @inline private def f32Hi(w: Long): Float = java.lang.Float.intBitsToFloat((w >>> 32).toInt)
+  @inline private def pack32(lo: Int, hi: Int): Long = (lo.toLong & M32) | (hi.toLong << 32)
+  @inline private def packF32(lo: Float, hi: Float): Long =
+    pack32(java.lang.Float.floatToRawIntBits(lo), java.lang.Float.floatToRawIntBits(hi))
+  @inline private def dv(w: Long): Double = java.lang.Double.longBitsToDouble(w)
+  @inline private def dl(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** Four bytes of `x` (low first), sign- or zero-extended to i16 lanes. */
+  private def widen8x4(x: Long, signed: Boolean): Long = {
+    var r = 0L
+    var k = 0
+    while (k < 4) {
+      val v = (x >>> (8 * k)) & 0xFF
+      r |= ((if (signed) (v << 56) >> 56 else v) & 0xFFFFL) << (16 * k)
+      k += 1
+    }
+    r
+  }
+
+  /** Two i16 of `x` (low first), sign- or zero-extended to i32 lanes. */
+  private def widen16x2(x: Long, signed: Boolean): Long = {
+    val a = x & 0xFFFF; val b = (x >>> 16) & 0xFFFF
+    if (signed) pack32(a.toShort, b.toShort) else a | (b << 32)
+  }
+
+  private def i32x2Cmp(op: Int, a: Long, b: Long): Long = {
+    def cmp(x: Int, y: Int): Boolean = (op: @annotation.switch) match {
+      case 0x337 => x == y
+      case 0x338 => x != y
+      case 0x339 => x < y
+      case 0x33A => Integer.compareUnsigned(x, y) < 0
+      case 0x33B => x > y
+      case 0x33C => Integer.compareUnsigned(x, y) > 0
+      case 0x33D => x <= y
+      case 0x33E => Integer.compareUnsigned(x, y) <= 0
+      case 0x33F => x >= y
+      case _ => Integer.compareUnsigned(x, y) >= 0
+    }
+    (if (cmp(a.toInt, b.toInt)) M32 else 0L) |
+      (if (cmp((a >>> 32).toInt, (b >>> 32).toInt)) M32 << 32 else 0L)
+  }
+
+  private def f32x2Cmp(op: Int, a: Long, b: Long): Long = {
+    def cmp(x: Float, y: Float): Boolean = (op: @annotation.switch) match {
+      case 0x341 => x == y
+      case 0x342 => x != y
+      case 0x343 => x < y
+      case 0x344 => x > y
+      case 0x345 => x <= y
+      case _ => x >= y
+    }
+    (if (cmp(f32Lo(a), f32Lo(b))) M32 else 0L) |
+      (if (cmp(f32Hi(a), f32Hi(b))) M32 << 32 else 0L)
+  }
+
+  private def f64Cmp(op: Int, a: Long, b: Long): Long = {
+    val x = dv(a); val y = dv(b)
+    val r = (op: @annotation.switch) match {
+      case 0x347 => x == y
+      case 0x348 => x != y
+      case 0x349 => x < y
+      case 0x34A => x > y
+      case 0x34B => x <= y
+      case _ => x >= y
+    }
+    if (r) -1L else 0L
+  }
+
+  private def i64Cmp(op: Int, x: Long, y: Long): Long = {
+    val r = (op: @annotation.switch) match {
+      case 0x3D6 => x == y
+      case 0x3D7 => x != y
+      case 0x3D8 => x < y
+      case 0x3D9 => x > y
+      case 0x3DA => x <= y
+      case _ => x >= y
+    }
+    if (r) -1L else 0L
+  }
+
+  private def i32x2Un(op: Int, w: Long): Long =
+    if (op == 0x3A0) pack32(math.abs(w.toInt), math.abs((w >>> 32).toInt))
+    else pack32(-w.toInt, -(w >>> 32).toInt)
+
+  private def i32x2Shift(op: Int, w: Long, k: Int): Long = {
+    val a = w.toInt; val b = (w >>> 32).toInt
+    (op: @annotation.switch) match {
+      case 0x3AB => pack32(a << k, b << k)
+      case 0x3AC => pack32(a >> k, b >> k)
+      case _ => pack32(a >>> k, b >>> k)
+    }
+  }
+
+  private def i32x2Bin(op: Int, a: Long, b: Long): Long = {
+    def bin(x: Int, y: Int): Int = (op: @annotation.switch) match {
+      case 0x3AE => x + y
+      case 0x3B1 => x - y
+      case 0x3B5 => x * y
+      case 0x3B6 => math.min(x, y)
+      case 0x3B7 => if (Integer.compareUnsigned(x, y) <= 0) x else y
+      case 0x3B8 => math.max(x, y)
+      case _ => if (Integer.compareUnsigned(x, y) >= 0) x else y
+    }
+    pack32(bin(a.toInt, b.toInt), bin((a >>> 32).toInt, (b >>> 32).toInt))
+  }
+
+  /** f32x4 rounding (0x367-0x36A) and abs / neg / sqrt (0x3E0-0x3E3). */
+  private def f32x2Un(op: Int, w: Long): Long = {
+    def un(v: Float): Float = (op: @annotation.switch) match {
+      case 0x367 => math.ceil(v.toDouble).toFloat
+      case 0x368 => math.floor(v.toDouble).toFloat
+      case 0x369 => truncD(v.toDouble).toFloat
+      case 0x36A => math.rint(v.toDouble).toFloat
+      case 0x3E0 => math.abs(v)
+      case 0x3E1 => -v
+      case _ => math.sqrt(v.toDouble).toFloat
+    }
+    packF32(un(f32Lo(w)), un(f32Hi(w)))
+  }
+
+  private def f32x2Bin(op: Int, a: Long, b: Long): Long = {
+    def bin(x: Float, y: Float): Float = (op: @annotation.switch) match {
+      case 0x3E4 => x + y
+      case 0x3E5 => x - y
+      case 0x3E6 => x * y
+      case 0x3E7 => x / y
+      case 0x3E8 => // min: NaN-propagating, -0 < +0
+        if (x.isNaN || y.isNaN) Float.NaN
+        else if (x == 0.0f && y == 0.0f)
+          if ((java.lang.Float.floatToRawIntBits(x) |
+            java.lang.Float.floatToRawIntBits(y)) < 0) -0.0f else 0.0f
+        else math.min(x, y)
+      case 0x3E9 =>
+        if (x.isNaN || y.isNaN) Float.NaN
+        else if (x == 0.0f && y == 0.0f)
+          if ((java.lang.Float.floatToRawIntBits(x) &
+            java.lang.Float.floatToRawIntBits(y)) < 0) -0.0f else 0.0f
+        else math.max(x, y)
+      case 0x3EA => if (y < x) y else x // pmin
+      case _ => if (x < y) y else x     // pmax
+    }
+    packF32(bin(f32Lo(a), f32Lo(b)), bin(f32Hi(a), f32Hi(b)))
+  }
+
+  /** i32x4.trunc_sat_f32x4_{s,u} (0x3F8, 0x3F9) and
+    * f32x4.convert_i32x4_{s,u} (0x3FA, 0x3FB). */
+  private def i32f32Cvt(op: Int, w: Long): Long = (op: @annotation.switch) match {
+    case 0x3F8 => pack32(f32Lo(w).toInt, f32Hi(w).toInt)
+    case 0x3F9 => satU32(f32Lo(w).toDouble) | (satU32(f32Hi(w).toDouble) << 32)
+    case 0x3FA => packF32(w.toInt.toFloat, (w >>> 32).toInt.toFloat)
+    case _ => packF32((w & M32).toFloat, (w >>> 32).toFloat)
+  }
+
+  /** f64x2 rounding (ceil, floor, trunc, nearest) and abs / neg / sqrt. */
+  private def f64Un(op: Int, w: Long): Long = {
+    val v = dv(w)
+    dl((op: @annotation.switch) match {
+      case 0x374 => math.ceil(v)
+      case 0x375 => math.floor(v)
+      case 0x37A => truncD(v)
+      case 0x394 => math.rint(v)
+      case 0x3EC => math.abs(v)
+      case 0x3ED => -v
+      case _ => math.sqrt(v)
+    })
+  }
+
+  private def f64Bin(op: Int, a: Long, b: Long): Long = {
+    val x = dv(a); val y = dv(b)
+    dl((op: @annotation.switch) match {
+      case 0x3F0 => x + y
+      case 0x3F1 => x - y
+      case 0x3F2 => x * y
+      case 0x3F3 => x / y
+      case 0x3F4 => // min: NaN-propagating, -0 < +0 (spec fmin)
+        if (x.isNaN || y.isNaN) Double.NaN
+        else if (x == 0.0 && y == 0.0)
+          if ((dl(x) | dl(y)) < 0) -0.0 else 0.0
+        else math.min(x, y)
+      case 0x3F5 =>
+        if (x.isNaN || y.isNaN) Double.NaN
+        else if (x == 0.0 && y == 0.0)
+          if ((dl(x) & dl(y)) < 0) -0.0 else 0.0
+        else math.max(x, y)
+      case 0x3F6 => if (y < x) y else x // pmin
+      case _ => if (x < y) y else x     // pmax
+    })
+  }
 }

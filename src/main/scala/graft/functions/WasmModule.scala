@@ -527,6 +527,73 @@ final class WasmModule private (bytes: Array[Byte]) {
     }
     def enterDead(): Unit = { if (!dead) { dead = true; deadDepth = blocks.length } }
 
+    /** The 0xFD SIMD prefix (r19): the v128 core subset, whose values are
+      * 2-slot (lo, hi) pairs on the uniform Long stack. A local def, so
+      * scalac emits it as a method of its own and decodeBody stays under
+      * HotSpot's 8,000-byte HugeMethodLimit (see WasmInterpreterSpec). */
+    def decodeSimd(sub: Int): Unit = {
+      @inline def simd(delta: Int, lane: Int = 0, mem: Boolean = false,
+          vec: Boolean = false): Unit = {
+        // argM carries the memarg offset for load/store and the lane
+        // immediate for extract/replace (load/store_lane below keep
+        // their lane in argL)
+        val m = if (mem) { u32(); u32() } else lane
+        emit(0x300 | sub, 0, m, delta)
+        if (vec) pushVec()
+      }
+      sub match {
+        case 0 => simd(1, mem = true, vec = true) // v128.load
+        case s if s >= 1 && s <= 10 => // load 8x8/16x4/32x2_{s,u},
+          simd(1, mem = true, vec = true) // load{8,16,32,64}_splat
+        case 11 => simd(-3, mem = true) // v128.store
+        case 92 | 93 => simd(1, mem = true, vec = true) // load{32,64}_zero
+        case s if s >= 84 && s <= 87 => // load{8,16,32,64}_lane:
+          // memarg THEN lane byte; pops vec+addr, pushes vec
+          val off = { u32(); u32() }
+          val lane = u8()
+          emit(0x300 | s, lane.toLong, off, -1); pushVec()
+        case s if s >= 88 && s <= 91 => // store{8,16,32,64}_lane
+          val off = { u32(); u32() }
+          val lane = u8()
+          emit(0x300 | s, lane.toLong, off, -3)
+        case 12 => // v128.const: 16 LE bytes → two i64 pushes
+          val lo = readF64Bits(); val hi = readF64Bits()
+          emit(0x42, lo, 0, 1); emit(0x42, hi, 0, 1); pushVec()
+        case 17 | 18 | 19 | 20 => simd(1, vec = true) // i32x4/i64x2/f32x4/f64x2.splat
+        case 27 | 29 | 31 | 33 => simd(-1, lane = u8()) // extract_lane
+        case 28 | 30 | 32 | 34 => simd(-1, lane = u8(), vec = true) // replace_lane
+        case s if s >= 55 && s <= 64 => simd(-2, vec = true) // i32x4 cmp
+        case s if s >= 65 && s <= 70 => simd(-2, vec = true) // f32x4 cmp
+        case s if s >= 71 && s <= 76 => simd(-2, vec = true) // f64x2 cmp
+        case s if s >= 214 && s <= 219 => simd(-2, vec = true) // i64x2 cmp
+        case 77 => simd(0, vec = true) // v128.not
+        case 78 | 79 | 80 | 81 => simd(-2, vec = true) // and/andnot/or/xor
+        case 82 => simd(-4, vec = true) // bitselect
+        case 83 => simd(-1) // v128.any_true
+        case 160 | 161 => simd(0, vec = true) // i32x4.abs/neg
+        case 163 | 164 => simd(-1) // i32x4.all_true/bitmask
+        case 171 | 172 | 173 => simd(-1, vec = true) // i32x4 shifts
+        case 174 | 177 | 181 => simd(-2, vec = true) // i32x4 add/sub/mul
+        case s if s >= 182 && s <= 185 => simd(-2, vec = true) // i32x4 min/max
+        case 192 | 193 => simd(0, vec = true) // i64x2.abs/neg
+        case 195 | 196 => simd(-1) // i64x2.all_true/bitmask
+        case 203 | 204 | 205 => simd(-1, vec = true) // i64x2 shifts
+        case 206 | 209 | 213 => simd(-2, vec = true) // i64x2 add/sub/mul
+        case 103 | 104 | 105 | 106 => simd(0, vec = true) // f32x4 round
+        case 116 | 117 | 122 | 148 => simd(0, vec = true) // f64x2 round
+        case 224 | 225 | 227 => simd(0, vec = true) // f32x4 abs/neg/sqrt
+        case s if s >= 228 && s <= 235 => simd(-2, vec = true) // f32x4 arith
+        case 236 | 237 | 239 => simd(0, vec = true) // f64x2 abs/neg/sqrt
+        case s if s >= 240 && s <= 247 => simd(-2, vec = true) // f64x2 arith
+        case s if s >= 248 && s <= 251 => simd(0, vec = true) // i32x4<->f32x4 cvt
+        case 252 | 253 => simd(0, vec = true) // i32x4.trunc_sat_f64x2_{s,u}_zero
+        case 254 | 255 => simd(0, vec = true) // f64x2.convert_low_i32x4_{s,u}
+        case other => throw new WasmParseException(
+          s"unsupported instruction in func $fidx (offset $pos): ${simdClass(other)} — " +
+            "outside the supported v128 core subset")
+      }
+    }
+
     while (pos < bodyEnd) {
       val op = u8()
       op match {
@@ -759,70 +826,9 @@ final class WasmModule private (bytes: Array[Byte]) {
               s"unsupported instruction in func $fidx (offset $pos): ${fcClass(other)} — " +
                 "outside the supported MVP+sign-extension+sat-trunc+bulk-memory surface")
           }
-        case 0xFD => // SIMD prefix (r19): the v128 core subset — values
-          // are 2-slot (lo, hi) pairs on the uniform Long stack
+        case 0xFD =>
           sawSimd = true
-          val sub = u32()
-          @inline def simd(delta: Int, lane: Int = 0, mem: Boolean = false,
-              vec: Boolean = false): Unit = {
-            // argM carries the memarg offset for load/store and the lane
-            // immediate for extract/replace (the interpreter's slow path
-            // receives argM only)
-            val m = if (mem) { u32(); u32() } else lane
-            emit(0x300 | sub, 0, m, delta)
-            if (vec) pushVec()
-          }
-          sub match {
-            case 0 => simd(1, mem = true, vec = true) // v128.load
-            case s if s >= 1 && s <= 10 => // load 8x8/16x4/32x2_{s,u},
-              simd(1, mem = true, vec = true) // load{8,16,32,64}_splat
-            case 11 => simd(-3, mem = true) // v128.store
-            case 92 | 93 => simd(1, mem = true, vec = true) // load{32,64}_zero
-            case s if s >= 84 && s <= 87 => // load{8,16,32,64}_lane:
-              // memarg THEN lane byte; pops vec+addr, pushes vec
-              val off = { u32(); u32() }
-              val lane = u8()
-              emit(0x300 | s, lane.toLong, off, -1); pushVec()
-            case s if s >= 88 && s <= 91 => // store{8,16,32,64}_lane
-              val off = { u32(); u32() }
-              val lane = u8()
-              emit(0x300 | s, lane.toLong, off, -3)
-            case 12 => // v128.const: 16 LE bytes → two i64 pushes
-              val lo = readF64Bits(); val hi = readF64Bits()
-              emit(0x42, lo, 0, 1); emit(0x42, hi, 0, 1); pushVec()
-            case 17 | 18 | 19 | 20 => simd(1, vec = true) // i32x4/i64x2/f32x4/f64x2.splat
-            case 27 | 29 | 31 | 33 => simd(-1, lane = u8()) // extract_lane
-            case 28 | 30 | 32 | 34 => simd(-1, lane = u8(), vec = true) // replace_lane
-            case s if s >= 55 && s <= 64 => simd(-2, vec = true) // i32x4 cmp
-            case s if s >= 65 && s <= 70 => simd(-2, vec = true) // f32x4 cmp
-            case s if s >= 71 && s <= 76 => simd(-2, vec = true) // f64x2 cmp
-            case s if s >= 214 && s <= 219 => simd(-2, vec = true) // i64x2 cmp
-            case 77 => simd(0, vec = true) // v128.not
-            case 78 | 79 | 80 | 81 => simd(-2, vec = true) // and/andnot/or/xor
-            case 82 => simd(-4, vec = true) // bitselect
-            case 83 => simd(-1) // v128.any_true
-            case 160 | 161 => simd(0, vec = true) // i32x4.abs/neg
-            case 163 | 164 => simd(-1) // i32x4.all_true/bitmask
-            case 171 | 172 | 173 => simd(-1, vec = true) // i32x4 shifts
-            case 174 | 177 | 181 => simd(-2, vec = true) // i32x4 add/sub/mul
-            case s if s >= 182 && s <= 185 => simd(-2, vec = true) // i32x4 min/max
-            case 192 | 193 => simd(0, vec = true) // i64x2.abs/neg
-            case 195 | 196 => simd(-1) // i64x2.all_true/bitmask
-            case 203 | 204 | 205 => simd(-1, vec = true) // i64x2 shifts
-            case 206 | 209 | 213 => simd(-2, vec = true) // i64x2 add/sub/mul
-            case 103 | 104 | 105 | 106 => simd(0, vec = true) // f32x4 round
-            case 116 | 117 | 122 | 148 => simd(0, vec = true) // f64x2 round
-            case 224 | 225 | 227 => simd(0, vec = true) // f32x4 abs/neg/sqrt
-            case s if s >= 228 && s <= 235 => simd(-2, vec = true) // f32x4 arith
-            case 236 | 237 | 239 => simd(0, vec = true) // f64x2 abs/neg/sqrt
-            case s if s >= 240 && s <= 247 => simd(-2, vec = true) // f64x2 arith
-            case s if s >= 248 && s <= 251 => simd(0, vec = true) // i32x4<->f32x4 cvt
-            case 252 | 253 => simd(0, vec = true) // i32x4.trunc_sat_f64x2_{s,u}_zero
-            case 254 | 255 => simd(0, vec = true) // f64x2.convert_low_i32x4_{s,u}
-            case other => throw new WasmParseException(
-              s"unsupported instruction in func $fidx (offset $pos): ${simdClass(other)} — " +
-                "outside the supported v128 core subset")
-          }
+          decodeSimd(u32())
         case other => throw new WasmParseException(
           f"unsupported instruction in func $fidx (offset $pos): ${opcodeClass(other)} — " +
             "module is outside the supported MVP+sign-extension+sat-trunc+bulk-memory surface")

@@ -724,4 +724,311 @@ class WasmInterpreterSpec extends AnyFunSuite {
     assert(got.map(v => java.lang.Float.intBitsToFloat(v.toInt))
       === Some(-2.0f))
   }
+
+  // ---- the interpreter's cold-op arms -------------------------------------
+
+  /** Every opcode the interpreter dispatches outside its hot loop, run
+    * over fixed operands; the digest was recorded before those arms were
+    * split into their own methods and must never move. Each function
+    * either uses v128 or declares a v128 local, so WasmJit (which compiles
+    * no SIMD function) leaves it to the interpreter. Float results are
+    * recorded with every NaN folded to one token: neither the JVM (for
+    * its arithmetic and Math intrinsics, which may differ between the
+    * bytecode interpreter and compiled code) nor the wasm spec fixes a
+    * computed NaN's sign and payload; every non-NaN float keeps its bits.
+    * The digest was also checked under -Xint and -XX:-TieredCompilation. */
+  test("cold-op semantics pin: every scalar and v128 opcode of the " +
+    "interpreter's cold arms, over NaN payloads, -0.0, +-Inf, subnormals, " +
+    "integer bounds and mixed lanes, digests to the recorded value") {
+    val F32 = 0x7D
+    val M32 = 0xFFFFFFFFL
+    def fb(v: Float): Long = java.lang.Float.floatToRawIntBits(v).toLong & M32
+    val i32s = Seq(0L, 1L, M32, 0x80000000L, 0x7FFFFFFFL, 0x80L, 0xFFFFL, 33L,
+      0x00F0F000L)
+    val i64s = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue, 0x80L,
+      0x80000000L, 65L, 0x123456789ABCDEF0L)
+    val f32s = Seq(0f, -0f, 1.5f, -2.5f, 0.5f, 3.5f, -0.75f, -1f,
+      Float.MaxValue, Float.MinPositiveValue, Float.PositiveInfinity,
+      Float.NegativeInfinity, 2147483648f, -2147483904f, 4294967296f,
+      9.223372e18f).map(fb) ++
+      Seq(0x7FC12345L, 0xFFC00001L, 0x7F812345L, 0x007FFFFFL) // NaNs, max subnormal
+    val f64s = Seq(0.0, -0.0, 1.5, -2.5, 0.5, 3.5, -0.75, -1.0,
+      Double.MaxValue, Double.MinPositiveValue, Double.PositiveInfinity,
+      Double.NegativeInfinity, 2147483647.5, -2147483648.5, 4294967295.5,
+      9.223372036854776E18, 1.8446744073709552E19).map(dbits) ++
+      Seq(0x7FF8000000012345L, 0xFFF0000000000001L, 0x000FFFFFFFFFFFFFL)
+    def grid(t: Int): Seq[Long] = t match {
+      case I32 => i32s
+      case I64 => i64s
+      case F32 => f32s
+      case F64 => f64s
+    }
+    val v128s: Seq[(Long, Long)] = Seq(
+      (0L, 0L), (-1L, -1L),
+      (Long.MinValue, Long.MaxValue),
+      (0x7FFFFFFF80000000L, 0x00000001FFFFFFFFL),
+      (0x7FC12345L | (fb(-0f) << 32), fb(Float.PositiveInfinity) | (1L << 32)),
+      (fb(1.5f) | (fb(-2.5f) << 32), fb(0.5f) | (fb(-0.75f) << 32)),
+      (fb(2147483648f) | (fb(4294967296f) << 32), fb(-1f) | (0xFFC00001L << 32)),
+      (0x7FF8000000012345L, dbits(-0.0)),
+      (dbits(Double.PositiveInfinity), 1L),
+      (dbits(2.5), dbits(-3.5)),
+      (dbits(1e10), dbits(-2147483648.5)),
+      (0x80FF017F00FE8001L, 0x0123456789ABCDEFL))
+
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    var cases = 0
+    def rec(line: String): Unit = {
+      md.update(line.getBytes("UTF-8")); md.update('\n'.toByte); cases += 1
+    }
+    def canon(t: Int, v: Long): String = t match {
+      case F32 if java.lang.Float.isNaN(java.lang.Float.intBitsToFloat(v.toInt)) => "nan"
+      case F64 if java.lang.Double.isNaN(dval(v)) => "nan"
+      case _ => v.toHexString
+    }
+    def le(bs: Array[Byte], at: Int): Long =
+      (0 until 8).map(k => (bs(at + k) & 0xFFL) << (8 * k)).sum
+    // linear memory: one page of a fixed byte pattern (sign bits set in
+    // every fourth byte or so), restored before every memory-touching call
+    val pattern = Array.tabulate[Byte](65536)(k => (k * 37 + 11).toByte)
+    def memWindows(inst: WasmInstance): String = {
+      val bs = inst.readBytes(0, 32) ++ inst.readBytes(65536 - 32, 32)
+      bs.map(x => f"${x & 0xFF}%02x").mkString
+    }
+    /** run f0 on `inst`; `out` renders a completed call's result */
+    def run(tag: String, inst: WasmInstance, args: Seq[Long], mem: Boolean)(
+        out: Option[Long] => String): Unit = {
+      if (mem) { inst.reset(); inst.writeBytes(0, pattern) }
+      val res = try out(inst.invoke("f0", args: _*))
+                catch { case t: WasmTrap => "trap:" + t.getMessage }
+      rec(s"$tag|${args.map(_.toHexString).mkString(",")}|$res")
+    }
+    def inst(ps: Seq[Int], rs: Seq[Int], code: Seq[Byte], memPages: Int = 0,
+        prefix: Seq[Byte] = Nil): WasmInstance = {
+      val body = prefix ++ ps.indices.flatMap(k => b(0x20, k)) ++ code ++ b(0x0B)
+      new WasmInstance(module(Seq((ps, rs)), Seq((0, Seq(V128), body)),
+        memPages = memPages))
+    }
+    def product(ts: Seq[Seq[Long]]): Seq[Seq[Long]] =
+      ts.foldLeft(Seq(Seq.empty[Long])) { (acc, g) => for (a <- acc; x <- g) yield a :+ x }
+
+    // ---- scalar: (opcode bytes, params, result) --------------------------
+    val bin = (lo: Int, hi: Int, t: Int, r: Int) => (lo to hi).map(o => (b(o), Seq(t, t), r))
+    val un = (lo: Int, hi: Int, t: Int, r: Int) => (lo to hi).map(o => (b(o), Seq(t), r))
+    val conv = Seq(0xA7 -> (I64, I32), 0xA8 -> (F32, I32), 0xA9 -> (F32, I32),
+      0xAA -> (F64, I32), 0xAB -> (F64, I32), 0xAC -> (I32, I64),
+      0xAD -> (I32, I64), 0xAE -> (F32, I64), 0xAF -> (F32, I64),
+      0xB0 -> (F64, I64), 0xB1 -> (F64, I64), 0xB2 -> (I32, F32),
+      0xB3 -> (I32, F32), 0xB4 -> (I64, F32), 0xB5 -> (I64, F32),
+      0xB6 -> (F64, F32), 0xB7 -> (I32, F64), 0xB8 -> (I32, F64),
+      0xB9 -> (I64, F64), 0xBA -> (I64, F64), 0xBB -> (F32, F64),
+      0xBC -> (F32, I32), 0xBD -> (F64, I64), 0xC0 -> (I32, I32),
+      0xC1 -> (I32, I32), 0xC2 -> (I64, I64), 0xC3 -> (I64, I64),
+      0xC4 -> (I64, I64)).map { case (o, (p, r)) => (b(o), Seq(p), r) }
+    val satTrunc = Seq(F32 -> I32, F32 -> I32, F64 -> I32, F64 -> I32,
+      F32 -> I64, F32 -> I64, F64 -> I64, F64 -> I64).zipWithIndex
+      .map { case ((p, r), s) => (b(0xFC, s), Seq(p), r) }
+    val scalar = bin(0x48, 0x4F, I32, I32) ++ un(0x50, 0x50, I64, I32) ++
+      bin(0x51, 0x5A, I64, I32) ++ bin(0x5B, 0x60, F32, I32) ++
+      bin(0x61, 0x66, F64, I32) ++ un(0x67, 0x69, I32, I32) ++
+      Seq(0x6C, 0x6D, 0x6E, 0x6F, 0x70, 0x72, 0x73, 0x75, 0x77, 0x78)
+        .flatMap(o => bin(o, o, I32, I32)) ++
+      un(0x79, 0x7B, I64, I64) ++ bin(0x7C, 0x8A, I64, I64) ++
+      un(0x8B, 0x91, F32, F32) ++ bin(0x92, 0x98, F32, F32) ++
+      un(0x99, 0x9F, F64, F64) ++ bin(0xA0, 0xA6, F64, F64) ++
+      conv ++ satTrunc
+    for ((code, ps, r) <- scalar) {
+      val in = inst(ps, Seq(r), code)
+      for (args <- product(ps.map(grid)))
+        run(code.map(_ & 0xFF).mkString("op", ".", ""), in, args, mem = false)(
+          v => canon(r, v.get))
+    }
+    // reinterprets move bits: recorded raw
+    for ((o, p, r) <- Seq((0xBE, I32, F32), (0xBF, I64, F64))) {
+      val in = inst(Seq(p), Seq(r), b(o))
+      for (a <- grid(p) ++ grid(r)) run(s"op$o", in, Seq(a), mem = false)(_.get.toHexString)
+    }
+
+    // ---- scalar memory ---------------------------------------------------
+    val addrs = Seq(0L, 3L, 65528L, 65533L, 65535L, M32)
+    for ((o, r) <- Seq(0x2A -> F32, 0x2B -> F64, 0x2C -> I32, 0x2E -> I32,
+        0x2F -> I32, 0x30 -> I64, 0x31 -> I64, 0x32 -> I64, 0x33 -> I64,
+        0x34 -> I64, 0x35 -> I64); off <- Seq(0, 7)) {
+      val in = inst(Seq(I32), Seq(r), b(o, 0) ++ uleb(off.toLong), memPages = 1)
+      for (a <- addrs) run(s"load$o+$off", in, Seq(a), mem = true)(_.get.toHexString)
+    }
+    for ((o, t) <- Seq(0x38 -> F32, 0x39 -> F64, 0x3A -> I32, 0x3B -> I32,
+        0x3C -> I64, 0x3D -> I64, 0x3E -> I64); off <- Seq(0, 7)) {
+      val in = inst(Seq(I32, t), Nil, b(o, 0) ++ uleb(off.toLong), memPages = 1)
+      for (a <- addrs; v <- grid(t))
+        run(s"store$o+$off", in, Seq(a, v), mem = true)(_ => memWindows(in))
+    }
+    locally { // memory.grow then memory.size
+      val in = inst(Seq(I32), Seq(I32), b(0x40, 0, 0x3F, 0, 0x6A), memPages = 1)
+      for (d <- Seq(0L, 1L, 3L, 4096L, 0x7FFFFFFFL, M32))
+        run("grow+size", in, Seq(d), mem = true)(_.get.toHexString)
+    }
+    locally { // memory.copy (memmove) and memory.fill
+      val cp = inst(Seq(I32, I32, I32), Nil, b(0xFC, 10, 0, 0), memPages = 1)
+      for (args <- product(Seq(Seq(0L, 5L, 65530L), Seq(0L, 3L, 65530L),
+          Seq(0L, 4L, 16L, M32))))
+        run("memory.copy", cp, args, mem = true)(_ => memWindows(cp))
+      val fl = inst(Seq(I32, I32, I32), Nil, b(0xFC, 11, 0), memPages = 1)
+      for (args <- product(Seq(Seq(0L, 5L, 65530L), Seq(0L, 0xABL, 0x1FFL),
+          Seq(0L, 4L, 16L, M32))))
+        run("memory.fill", fl, args, mem = true)(_ => memWindows(fl))
+    }
+
+    // ---- v128 ------------------------------------------------------------
+    val V = V128
+    def vargs(ps: Seq[Int]): Seq[Seq[Long]] = product(ps.map {
+      case V => v128s.indices.map(_.toLong)
+      case t => grid(t)
+    }).map(_.zip(ps).flatMap {
+      case (k, V) => Seq(v128s(k.toInt)._1, v128s(k.toInt)._2)
+      case (x, _) => Seq(x)
+    })
+    /** a v128 result is stored at address 0 and read back (lanes canon'd
+      * by `lane`: I32/I64 raw, F32/F64 NaN-folded) */
+    def vres(in: WasmInstance, lane: Int): String = {
+      val bs = in.readBytes(0, 16)
+      val (lo, hi) = (le(bs, 0), le(bs, 8))
+      lane match {
+        case F32 => Seq(lo & M32, lo >>> 32, hi & M32, hi >>> 32).map(canon(F32, _)).mkString(":")
+        case F64 => Seq(lo, hi).map(canon(F64, _)).mkString(":")
+        case _ => s"${lo.toHexString}:${hi.toHexString}"
+      }
+    }
+    def vop(sub: Int, ps: Seq[Int], lane: Int, imm: Seq[Byte] = Nil,
+        mem: Boolean = false, argSets: Option[Seq[Seq[Long]]] = None): Unit = {
+      val in = inst(ps, Nil, fd(sub) ++ imm ++ fd(11) ++ b(0, 0),
+        memPages = 1, prefix = b(0x41, 0))
+      for (args <- argSets.getOrElse(vargs(ps)))
+        run(s"v$sub${imm.mkString("/", ".", "")}", in, args, mem)(_ => vres(in, lane))
+    }
+    def vscalar(sub: Int, ps: Seq[Int], r: Int, imm: Seq[Byte] = Nil): Unit = {
+      val in = inst(ps, Seq(r), fd(sub) ++ imm)
+      for (args <- vargs(ps))
+        run(s"v$sub${imm.mkString("/", ".", "")}", in, args, mem = false)(v => v.get.toHexString)
+    }
+    // loads: v128.load, extending loads, load_splat, load_zero
+    for (sub <- (0 to 10) ++ Seq(92, 93); off <- Seq(0, 7))
+      vop(sub, Seq(I32), I64, b(0) ++ uleb(off.toLong), mem = true,
+        argSets = Some(addrs.map(Seq(_))))
+    // load_lane / store_lane (memarg, then lane)
+    val laneAddrs = Seq(0L, 5L, 65528L, 65535L)
+    for ((sub, lanes) <- Seq(84 -> Seq(0, 7, 8, 15), 85 -> Seq(0, 3, 4, 7),
+        86 -> Seq(0, 1, 2, 3), 87 -> Seq(0, 1)); lane <- lanes) {
+      val sets = for (a <- laneAddrs; v <- v128s.take(4)) yield Seq(a, v._1, v._2)
+      vop(sub, Seq(I32, V), I64, b(0, 0, lane), mem = true, argSets = Some(sets))
+    }
+    for ((sub, lanes) <- Seq(11 -> Seq(-1), 88 -> Seq(0, 7, 8, 15),
+        89 -> Seq(0, 3, 4, 7), 90 -> Seq(0, 1, 2, 3), 91 -> Seq(0, 1));
+        lane <- lanes; off <- Seq(0, 7)) {
+      val imm = b(0) ++ uleb(off.toLong) ++ (if (lane < 0) Nil else b(lane))
+      val in = inst(Seq(I32, V), Nil, fd(sub) ++ imm, memPages = 1)
+      for (a <- laneAddrs ++ Seq(M32); v <- v128s.take(5))
+        run(s"v$sub${imm.mkString("/", ".", "")}", in, Seq(a, v._1, v._2),
+          mem = true)(_ => memWindows(in))
+    }
+    // splat / extract / replace
+    for ((sub, t) <- Seq(17 -> I32, 18 -> I64, 19 -> F32, 20 -> F64))
+      vop(sub, Seq(t), I64)
+    for ((sub, r, n) <- Seq((27, I32, 4), (29, I64, 2), (31, F32, 4), (33, F64, 2));
+         lane <- 0 until n)
+      vscalar(sub, Seq(V), r, b(lane))
+    for ((sub, t, n) <- Seq((28, I32, 4), (30, I64, 2), (32, F32, 4), (34, F64, 2));
+         lane <- 0 until n)
+      vop(sub, Seq(V, t), I64, b(lane))
+    // compares (masks are raw lanes) and bitwise
+    for (sub <- (55 to 76) ++ (78 to 81) ++ (214 to 219)) vop(sub, Seq(V, V), I64)
+    vop(77, Seq(V), I64)
+    vop(82, Seq(V, V, V), I64)
+    for (sub <- Seq(83, 163, 164, 195, 196)) vscalar(sub, Seq(V), I32)
+    // integer lanes
+    for (sub <- Seq(160, 161, 192, 193)) vop(sub, Seq(V), I64)
+    val shifts = Seq(0L, 1L, 31L, 32L, 33L, 63L, 64L, M32)
+    for (sub <- Seq(171, 172, 173, 203, 204, 205))
+      vop(sub, Seq(V, I32), I64, argSets = Some(
+        for (v <- v128s; k <- shifts) yield Seq(v._1, v._2, k)))
+    for (sub <- Seq(174, 177, 181, 182, 183, 184, 185, 206, 209, 213))
+      vop(sub, Seq(V, V), I64)
+    // float lanes
+    for (sub <- Seq(103, 104, 105, 106, 224, 225, 227, 250, 251)) vop(sub, Seq(V), F32)
+    for (sub <- 228 to 235) vop(sub, Seq(V, V), F32)
+    for (sub <- Seq(116, 117, 122, 148, 236, 237, 239, 254, 255)) vop(sub, Seq(V), F64)
+    for (sub <- 240 to 247) vop(sub, Seq(V, V), F64)
+    for (sub <- Seq(248, 249, 252, 253)) vop(sub, Seq(V), I64)
+
+    val digest = md.digest().map(x => f"${x & 0xFF}%02x").mkString
+    assert(cases > 10000, s"only $cases cases ran")
+    assert(digest === ColdOpDigest, s"cold-op results moved over $cases cases")
+  }
+
+  private val ColdOpDigest =
+    "eb58926942cc62ba45abd3b53cd6284dd5c28addd207a988c14e618c65b433f7"
+
+  /** (name + descriptor, code_length) of every method with a Code
+    * attribute in one class file (JVM spec 4.1, 4.7.3). */
+  private def codeLengths(bytes: Array[Byte]): Seq[(String, Int)] = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    in.skipBytes(8) // magic, minor, major
+    val n = in.readUnsignedShort()
+    val utf8 = new Array[String](n)
+    var i = 1
+    while (i < n) {
+      in.readUnsignedByte() match {
+        case 1 => utf8(i) = in.readUTF()
+        case 5 | 6 => in.skipBytes(8); i += 1 // long/double take two slots
+        case 7 | 8 | 16 | 19 | 20 => in.skipBytes(2)
+        case 15 => in.skipBytes(3)
+        case _ => in.skipBytes(4)
+      }
+      i += 1
+    }
+    in.skipBytes(6) // access flags, this, super
+    in.skipBytes(2 * in.readUnsignedShort()) // interfaces
+    def skipAttributes(): Unit =
+      for (_ <- 0 until in.readUnsignedShort()) { in.skipBytes(2); in.skipBytes(in.readInt()) }
+    for (_ <- 0 until in.readUnsignedShort()) { in.skipBytes(6); skipAttributes() } // fields
+    (0 until in.readUnsignedShort()).flatMap { _ =>
+      in.skipBytes(2)
+      val name = utf8(in.readUnsignedShort()) + utf8(in.readUnsignedShort())
+      (0 until in.readUnsignedShort()).flatMap { _ =>
+        val attr = utf8(in.readUnsignedShort())
+        val len = in.readInt()
+        if (attr == "Code") {
+          in.skipBytes(4) // max_stack, max_locals
+          val codeLength = in.readInt()
+          in.skipBytes(len - 8)
+          Some(name -> codeLength)
+        } else { in.skipBytes(len); None }
+      }
+    }
+  }
+
+  test("HotSpot's HugeMethodLimit: no method of a main graft class has " +
+    "over 8,000 bytes of bytecode (the JIT never compiles a bigger one, " +
+    "so it would run in the bytecode interpreter for the JVM's life)") {
+    val root = new java.io.File(classOf[WasmInstance].getProtectionDomain
+      .getCodeSource.getLocation.toURI)
+    assert(root.isDirectory, s"main classes are not a directory: $root")
+    def classFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) classFiles(f)
+        else if (f.getName.endsWith(".class")) Seq(f) else Nil
+      }
+    val files = classFiles(new java.io.File(root, "graft"))
+    assert(files.size > 100, s"found only ${files.size} class files under $root")
+    val huge = for {
+      f <- files
+      (method, size) <- codeLengths(java.nio.file.Files.readAllBytes(f.toPath))
+      if size > 8000
+    } yield {
+      val cls = root.toPath.relativize(f.toPath).toString
+        .stripSuffix(".class").replace(java.io.File.separatorChar, '.')
+      s"$cls.$method: $size bytes"
+    }
+    assert(huge.isEmpty, "over the 8,000-byte HugeMethodLimit: " + huge.sorted.mkString("; "))
+  }
 }

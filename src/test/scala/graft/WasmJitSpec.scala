@@ -622,4 +622,23 @@ class WasmJitSpec extends AnyFunSuite {
     val bytes = moduleBytes(Seq((Seq.empty[Int], Seq(I64))), Seq((0, Nil, f0)))
     intercept[WasmModule.WasmParseException] { WasmModule.parse(bytes) }
   }
+
+  test("decoded bodies of the four vendored guests (ops, argL, argM, " +
+    "branch tables, frame sizes) digest to the value recorded before " +
+    "decodeBody was split below HotSpot's HugeMethodLimit") {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    var nfuncs = 0
+    for (bytes <- Seq(PowWasm.bytes, SatWasm.bytes, EchoWasm.bytes, SimdWasm.bytes);
+         f <- WasmModule.parse(bytes).funcs) {
+      val line = Seq(s"${f.typeId} ${f.nparams} ${f.nlocals} ${f.nres} " +
+        s"${f.maxStack} ${f.usesSimd}", f.ops.mkString(","),
+        f.argL.mkString(","), f.argM.mkString(","),
+        f.brTables.map(_.mkString(",")).mkString(";")).mkString("|")
+      md.update(line.getBytes("UTF-8")); md.update('\n'.toByte)
+      nfuncs += 1
+    }
+    val digest = md.digest().map(x => f"${x & 0xFF}%02x").mkString
+    assert(digest === "53e91a86b12c5f65829e308bfb318af64f506fcf12da40b7eaaa169412e3c1d6",
+      s"decoded bodies moved ($nfuncs functions)")
+  }
 }
